@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_tables
+from ..functions.pystage import python_stage_width, to_width
 from ..registry import query
 
 
@@ -484,28 +485,15 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     always named as the real-decode shape.  Integer energies are
     order-free, so the kernel is bit-identical to the former
     interpreted per-byte JVM fold (digest-proven at sf0.001/0.01/0.1);
-    measured 1.58 -> 0.25 s at sf0.1.  Task width is sized by input
-    bytes (the x_emb_gram_gemm rule) so the Python stage never pays
-    per-roundtrip scheduling for KB-sized slices.  Still no shuffle;
-    the operator output remains the only thing that grows."""
-    import os
-    from collections.abc import Iterator
-
+    measured 1.58 -> 0.25 s at sf0.1.  Task width comes from
+    ``functions.pystage`` (sized by input bytes), so the Python stage
+    never pays per-task worker cost for KB-sized slices.  A NULL text
+    has no bytes and yields no frames, as in the oracle."""
     import numpy as np
-    import pandas as pd
 
-    from .llm_similarity import dataset_bytes
-
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        nbytes = dataset_bytes(os.path.join(sf_dir, "documents.parquet"))
-        width = max(1, min(n_part, nbytes // (16 << 20)))
-    except OSError:  # non-local sf_dir: keep full parallelism
-        width = n_part
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(width)
+    docs = to_width(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+        python_stage_width(spark, sf_dir, "documents"),
     )
 
     def frame_energies(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -514,6 +502,8 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             ids, fidx, es = [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                if text is None:
+                    continue
                 b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
                 nf = len(b) // _AUDIO_FRAME
                 if nf == 0:

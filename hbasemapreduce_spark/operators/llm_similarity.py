@@ -9,36 +9,16 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.pystage import python_stage_width, to_width
 from ..functions.vectors import brute_force_topk, cosine, dot, hyperplane_signature, norm
 from ..registry import query
 
 _N_QUERIES = 10
 _K = 5
-
-
-def dataset_bytes(path: str) -> int:
-    """Data bytes of a parquet dataset path, whether a single file or a
-    directory of part files.  The r10 ADVICE finding this fixes:
-    ``os.path.getsize`` on a directory returns the inode size (~4 KB)
-    WITHOUT raising, so an input-bytes-sized Python stage silently
-    serialized at exactly the scale the sizing exists for.  Metadata
-    files (leading '_' or '.') are excluded, matching what a scan
-    actually reads.  Raises OSError for a missing path (callers treat
-    that as 'non-local source: keep full parallelism')."""
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
-            if not f.startswith(("_", "."))
-        )
-    return os.path.getsize(path)
 
 
 @query(
@@ -1102,15 +1082,11 @@ def emb_gram_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE pass over the corpus, all flops vectorized in
     numpy, shuffle carries only n_partitions x d(d+1)/2 partial rows.
-    The Python-stage width is sized by INPUT BYTES (~16 MB per task,
-    capped at the session shuffle parallelism): r9/r10 A/B profiling
-    showed the fixed 32-way repartition was the key's entire
-    contention sensitivity — 32 Arrow worker roundtrips carrying ~60 KB
-    each inflated 60x under a saturated box while the single-partition
-    shape stayed flat, because each roundtrip pays a scheduler+worker
-    latency that contention multiplies and the flops (8 M/task here)
-    never mattered.  At 100 TB the same formula yields the cap, i.e.
-    full parallelism, so the scale path is unchanged.
+    The Python-stage width comes from ``functions.pystage`` (sized by
+    input bytes): a fixed 32-way repartition was this key's entire
+    contention sensitivity, because each Arrow worker roundtrip pays a
+    scheduler+worker cost that contention multiplies while the flops
+    (8 M/task) never mattered.
     """
     return _gram_micros_tri(spark, sf_dir).select(
         "i", "j", (F.col("micros").cast("double") / F.lit(1e6)).alias("g")
@@ -1128,24 +1104,20 @@ def _gram_micros_tri(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        nbytes = dataset_bytes(os.path.join(sf_dir, "embeddings.parquet"))
-        width = max(1, min(n_part, nbytes // (16 << 20)))
-    except OSError:  # non-local sf_dir: keep full parallelism
-        width = n_part
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(width)
-        .select(F.col("embedding").cast("array<double>").alias("e"))
+    emb = to_width(
+        load_table(spark, sf_dir, "embeddings").select(
+            F.col("embedding").cast("array<double>").alias("e")
+        ),
+        python_stage_width(spark, sf_dir, "embeddings"),
     )
 
     def partial_gram(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc = None
         for pdf in batches:
-            if not len(pdf):
+            rows = pdf["e"][pdf["e"].notna()]  # a NULL embedding adds no terms
+            if not len(rows):
                 continue
-            arr = np.asarray(pdf["e"].tolist(), dtype=np.float64)
+            arr = np.asarray(rows.tolist(), dtype=np.float64)
             for lo in range(0, arr.shape[0], 256):
                 chunk = arr[lo : lo + 256]
                 prod = chunk[:, :, None] * chunk[:, None, :]

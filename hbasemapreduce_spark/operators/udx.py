@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..catalog import load_table
+from ..functions.pystage import python_stage_width, to_width
 from ..registry import query
 
 
@@ -70,10 +71,15 @@ def _group_stats(pdf: pd.DataFrame) -> pd.DataFrame:
 )
 def udaf_grouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-map applyInPandas: the whole group arrives as one pandas
-    DataFrame per key (shuffle on the group key, Arrow both ways)."""
+    DataFrame per key (Arrow both ways).  Task width comes from
+    ``functions.pystage`` (sized by input bytes): one task and no
+    shuffle for a small input, else one hash exchange on the group
+    key."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_returnflag", "l_quantity", "l_extendedprice"
+    )
     return (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_returnflag", "l_quantity", "l_extendedprice")
+        to_width(li, python_stage_width(spark, sf_dir, "lineitem"), "l_returnflag")
         .groupBy("l_returnflag")
         .applyInPandas(
             _group_stats,
@@ -274,7 +280,9 @@ def udx_cogrouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     The declarative LEFT JOIN + aggregate (the oracle's shape) is what
     you ship when the logic fits SQL; cogroup earns its place when it
     doesn't, and this key proves the plumbing under the hash check
-    either way."""
+    either way.  Task width comes from ``functions.pystage``, sized
+    from the bytes of both inputs: one task and no co-shuffle for a
+    small input, else one hash exchange on ``bkt`` per side."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.col("o_totalprice").cast("decimal(18,2)") * 100)
@@ -289,9 +297,11 @@ def udx_cogrouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("ext_cents"),
         F.pmod("l_orderkey", F.lit(256)).alias("bkt"),
     )
+    width = python_stage_width(spark, sf_dir, "orders", "lineitem")
     return (
-        orders.groupBy("bkt")
-        .cogroup(items.groupBy("bkt"))
+        to_width(orders, width, "bkt")
+        .groupBy("bkt")
+        .cogroup(to_width(items, width, "bkt").groupBy("bkt"))
         .applyInPandas(
             _reconcile_cogroups,
             schema=(
@@ -408,7 +418,11 @@ def udx_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("price_c"),
     )
-    return li.groupBy("l_returnflag").applyInArrow(
-        _arrow_group_stats,
-        schema="l_returnflag string, n long, sum_qty_c long, max_price_c long",
+    return (
+        to_width(li, python_stage_width(spark, sf_dir, "lineitem"), "l_returnflag")
+        .groupBy("l_returnflag")
+        .applyInArrow(
+            _arrow_group_stats,
+            schema="l_returnflag string, n long, sum_qty_c long, max_price_c long",
+        )
     )

@@ -250,7 +250,7 @@ def test_dataset_bytes_handles_files_dirs_and_missing(tmp_path):
 
     import pytest
 
-    from hbasemapreduce_spark.operators.llm_similarity import dataset_bytes
+    from hbasemapreduce_spark.functions.pystage import dataset_bytes
 
     f = tmp_path / "single.parquet"
     f.write_bytes(b"x" * 1000)

@@ -32,3 +32,36 @@ def test_rows_only_runs(spark, key):
     n = df.count()
     assert n >= 0
     assert len(df.schema.fields) > 0
+
+
+# key -> (table, column) to plant NULLs in: a NULL row contributes
+# nothing (no audio frames, no Gram terms), which is what each DuckDB
+# oracle does with it.  The testdata has no NULLs, so this copies it.
+NULL_ROW_CASES = {
+    "x_multimodal_audio_energy": ("documents", "text"),
+    "x_emb_gram_gemm": ("embeddings", "embedding"),
+}
+
+
+@pytest.mark.parametrize("key", sorted(NULL_ROW_CASES))
+def test_oracle_match_with_null_rows(spark, tmp_path, key):
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table, column = NULL_ROW_CASES[key]
+    t = pq.read_table(f"{SF_DIR}/{table}.parquet")
+    values = [None if i % 7 == 3 else v for i, v in enumerate(t[column].to_pylist())]
+    i = t.schema.get_field_index(column)
+    t = t.set_column(i, t.schema.field(i), pa.array(values, t.schema.field(i).type))
+    pq.write_table(t, tmp_path / f"{table}.parquet")
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{tmp_path}/{table}.parquet')"
+        )
+        duck_pdf = con.execute(SPECS[key].oracle).df()
+    finally:
+        con.close()
+    assert_frames_match(SPECS[key].fn(spark, str(tmp_path)).toPandas(), duck_pdf, key)

@@ -839,3 +839,71 @@ def test_ivf_pair_blocking_is_equi_join_no_label(spark):
         "label may appear only in the final projection after the "
         "anti-join, never in pair generation"
     )
+
+
+# Python stages whose width functions.pystage sets: key -> (tables the
+# width is sized from, grouping key or None for a map stage)
+_PY_STAGES = {
+    "udaf_grouped_pandas": (("lineitem",), "l_returnflag"),
+    "x_udx_apply_in_arrow": (("lineitem",), "l_returnflag"),
+    "x_udx_cogrouped_pandas": (("orders", "lineitem"), "bkt"),
+    "x_multimodal_audio_energy": (("documents",), None),
+    "x_emb_gram_gemm": (("embeddings",), None),
+}
+
+
+def _below_python_node(plan: str) -> list[str]:
+    """Lines of the subtree under the Python node of a 'simple' plan."""
+
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    lines = plan.split("== Physical Plan ==")[-1].splitlines()
+    top = next(i for i, ln in enumerate(lines) if "InPandas" in ln or "InArrow" in ln)
+    below = []
+    for ln in lines[top + 1 :]:
+        if not ln.strip() or depth(ln) <= depth(lines[top]):
+            break
+        below.append(ln)
+    return below
+
+
+@pytest.mark.parametrize("key", sorted(_PY_STAGES))
+def test_small_python_stage_is_one_task_without_exchange(spark, key):
+    # An input under the byte target runs its Python stage as one task
+    # (Coalesce 1): an Exchange here would shuffle a single split, and
+    # each extra Python task pays its own worker start-up.
+    below = _below_python_node(plan_of(spark, key, "simple"))
+    assert not [ln for ln in below if "Exchange" in ln], below
+    assert any("Coalesce 1" in ln for ln in below), below
+
+
+@pytest.mark.parametrize("key", sorted(_PY_STAGES))
+def test_wide_python_stage_has_one_exchange_and_same_rows(spark, monkeypatch, key):
+    # The width > 1 path, which the sf0.001 testdata never reaches on
+    # its own: shrink the byte target so the width is 3.  A grouped
+    # stage gets one hash exchange on its key per input side, a map
+    # stage one round-robin exchange, and the rows do not change.
+    import os
+    import re
+
+    from hbasemapreduce_spark.functions import pystage
+
+    from .conftest import canonicalize
+
+    tables, group_key = _PY_STAGES[key]
+    spec = all_specs()[key]
+    narrow = canonicalize(spec.fn(spark, SF_DIR).toPandas())
+    nbytes = sum(pystage.dataset_bytes(os.path.join(SF_DIR, f"{t}.parquet")) for t in tables)
+    monkeypatch.setattr(pystage, "TARGET_BYTES", nbytes // 3)
+    assert pystage.python_stage_width(spark, SF_DIR, *tables) == 3
+
+    exchanges = [ln for ln in _below_python_node(plan_of(spark, key, "simple")) if "Exchange" in ln]
+    if group_key is None:
+        assert len(exchanges) == 1 and "RoundRobinPartitioning(3)" in exchanges[0], exchanges
+    else:
+        sides = 2 if "cogrouped" in key else 1
+        pattern = re.compile(rf"hashpartitioning\({group_key}#\d+L?, 3\)")
+        assert len(exchanges) == sides, exchanges
+        assert all(pattern.search(ln) for ln in exchanges), exchanges
+    assert canonicalize(spec.fn(spark, SF_DIR).toPandas()).equals(narrow)
